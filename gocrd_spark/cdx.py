@@ -241,13 +241,13 @@ def fetch_planned_pages(plan: DataFrame, base_dir: str) -> DataFrame:
                     "html": [],
                     "error": [],
                 }
-                for _, r in batch.iterrows():
-                    urlkey, url = r["urlkey"], r["url"]
+                for urlkey, url, fname, offset, length in zip(
+                    batch["urlkey"], batch["url"], batch["filename"],
+                    batch["offset"], batch["length"],
+                ):
                     html, ts, err = None, pd.Timestamp("1970-01-01"), None
                     try:
-                        blob = read_range(
-                            r["filename"], int(r["offset"]), int(r["length"])
-                        )
+                        blob = read_range(fname, int(offset), int(length))
                         recs = parse_warc(blob)  # gunzips members itself
                         if len(recs) != 1:
                             raise ValueError(

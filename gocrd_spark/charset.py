@@ -34,7 +34,7 @@ from __future__ import annotations
 
 import codecs
 import re
-from typing import Iterator, Optional, Tuple
+from typing import Optional, Tuple
 
 _BOMS: tuple[tuple[bytes, str], ...] = (
     (codecs.BOM_UTF32_LE, "utf-32-le"),
@@ -112,28 +112,14 @@ def decode_pages(df, payload_col: str = "html"):
     shape as the extraction kernel — Scan -> MapInPandas, zero
     shuffles). The id column is pinned to ``doc_id long`` because the
     output schema is static; alias/cast upstream for other id shapes."""
-    import pandas as pd
+    from .kernel import as_bytes, row_kernel
 
-    def gen(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for batch in batches:
-            out = {
-                "doc_id": [],
-                "text": [],
-                "charset": [],
-                "charset_source": [],
-                "n_chars": [],
-            }
-            for _, r in batch.iterrows():
-                data = bytes(r[payload_col]) if r[payload_col] is not None else b""
-                text, enc, source = decode_bytes(data)
-                out["doc_id"].append(r["doc_id"])
-                out["text"].append(text)
-                out["charset"].append(enc)
-                out["charset_source"].append(source)
-                out["n_chars"].append(len(text))
-            yield pd.DataFrame(out)
+    def decode_row(payload):
+        text, enc, source = decode_bytes(as_bytes(payload))
+        return [(text, enc, source, len(text))]
 
-    return df.select("doc_id", payload_col).mapInPandas(gen, DECODED_SCHEMA)
+    kernel = row_kernel(decode_row, DECODED_SCHEMA, keys=("doc_id",), args=(payload_col,))
+    return df.select("doc_id", payload_col).mapInPandas(kernel, DECODED_SCHEMA)
 
 
 def fix_mojibake(
@@ -184,23 +170,11 @@ def mojibake_repair(df, text_col: str = "text", codec: str = "latin-1"):
     (doc_id, repaired text, changed 0/1, n_rounds). Same narrow
     Scan -> MapInPandas shape as decode_pages — zero shuffles, repairs
     happen where the rows already live."""
-    import pandas as pd
+    from .kernel import row_kernel
 
-    def gen(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for batch in batches:
-            fixed = []
-            rounds = []
-            for s in batch[text_col]:
-                f, n = fix_mojibake(s if s is not None else "", codec=codec)
-                fixed.append(f)
-                rounds.append(n)
-            yield pd.DataFrame(
-                {
-                    "doc_id": batch["doc_id"],
-                    "text": fixed,
-                    "changed": [1 if r > 0 else 0 for r in rounds],
-                    "n_rounds": rounds,
-                }
-            )
+    def repair_row(text):
+        fixed, n = fix_mojibake(text if text is not None else "", codec=codec)
+        return [(fixed, 1 if n > 0 else 0, n)]
 
-    return df.select("doc_id", text_col).mapInPandas(gen, MOJIBAKE_SCHEMA)
+    kernel = row_kernel(repair_row, MOJIBAKE_SCHEMA, keys=("doc_id",), args=(text_col,))
+    return df.select("doc_id", text_col).mapInPandas(kernel, MOJIBAKE_SCHEMA)

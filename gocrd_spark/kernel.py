@@ -3,13 +3,33 @@
 Everything here is ``mapInPandas``-shaped (iterator of pandas DataFrames
 in, iterator out): zero per-row Python UDFs (north rule). The kernels
 call the pure-Python document model (gocrd_spark.extract), which is unit
-tested without Spark; this module only adds batching, schema shaping and
-per-partition counters.
+tested without Spark; this module only adds batching and schema shaping.
+
+Every row kernel in the engine goes through one scaffold,
+:func:`row_kernel` (one batch: :func:`row_batch`). A kernel is a plain
+function ``fn(*args) -> list of tuples``: it maps one input row's
+``args`` columns to its output rows, and the scaffold
+
+- prepends the input row's ``keys`` columns to every output tuple;
+- assembles the output columns in ``schema`` order, and keeps them when
+  a batch is empty;
+- builds every ``LongType`` column as nullable ``Int64``, so a NULL in
+  the batch never coerces 64-bit values to float64 (53-bit mantissa);
+- where ``schema`` has an ``error`` column and ``fn`` raises, emits one
+  row: the keys, NULLs, and ``"<ExceptionClass>: <message>"`` — the
+  exception path, kept apart from the normal path (Tuplex's split).
+  Without an ``error`` column the exception fails the task.
+
+``state``, when given, is called once per partition and its result is
+passed to ``fn`` as the first argument (a cache that lives exactly as
+long as one partition, never as long as a reused Python worker).
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from functools import partial
+from itertools import repeat
+from typing import Callable, Iterator, Optional
 
 import pandas as pd
 
@@ -23,6 +43,76 @@ from pyspark.sql.types import (
 )
 
 from .extract import extract_any_document, mets_records
+from .feed import parse_feed, parse_sitemap
+from .htmlextract import extract_jsonld, extract_tables, page_meta
+
+
+def _fields(schema) -> list[tuple[str, bool]]:
+    """(name, is_long) per top-level column of a StructType or of a DDL
+    string such as ``"id long, feature array<float>"``."""
+    if isinstance(schema, StructType):
+        return [(f.name, isinstance(f.dataType, LongType)) for f in schema.fields]
+    fields, depth, start = [], 0, 0
+    for i, ch in enumerate(schema + ","):
+        depth += (ch == "<") - (ch == ">")
+        if ch == "," and depth == 0:
+            name, typ = schema[start:i].split(None, 1)
+            fields.append((name, typ.strip().lower() in ("long", "bigint")))
+            start = i + 1
+    return fields
+
+
+def row_batch(
+    fn: Callable, schema, keys=("url",), args=("html",)
+) -> Callable[[pd.DataFrame], pd.DataFrame]:
+    """The scaffold for one batch: pandas frame in, frame out."""
+    fields = _fields(schema)
+    has_error = any(name == "error" for name, _ in fields)
+    value_names = [name for name, _ in fields[len(keys):]]
+
+    def batch(pdf: pd.DataFrame) -> pd.DataFrame:
+        rows: list[tuple] = []
+        key_rows = zip(*(pdf[k] for k in keys)) if keys else repeat((), len(pdf))
+        for key, vals in zip(key_rows, zip(*(pdf[a] for a in args))):
+            try:
+                rows.extend([key + tuple(t) for t in fn(*vals)])
+            except Exception as exc:
+                if not has_error:
+                    raise
+                msg = f"{type(exc).__name__}: {exc}"
+                rows.append(key + tuple(msg if n == "error" else None for n in value_names))
+        if not rows:  # Arrow casts an empty object column to any type
+            return pd.DataFrame(
+                {name: pd.array([], dtype="Int64" if is_long else object) for name, is_long in fields}
+            )
+        return pd.DataFrame(
+            {
+                name: pd.array(col, dtype="Int64") if is_long else list(col)
+                for (name, is_long), col in zip(fields, zip(*rows))
+            }
+        )
+
+    return batch
+
+
+def row_kernel(
+    fn: Callable, schema, keys=("url",), args=("html",), state: Optional[Callable] = None
+) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
+    """The ``mapInPandas`` kernel for ``fn`` (module doc); named after
+    ``fn`` so the plan's MapInPandas node says which kernel it runs."""
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        f = partial(fn, state()) if state is not None else fn
+        return map(row_batch(f, schema, keys, args), batches)
+
+    kernel.__name__ = getattr(fn, "func", fn).__name__
+    return kernel
+
+
+def as_bytes(payload) -> bytes:
+    """A binary cell as bytes; NULL reads as the empty payload."""
+    return bytes(payload) if payload is not None else b""
+
 
 # long, not int: the reference parses @index and coordinates with
 # strconv.Atoi (64-bit), so values beyond int32 are legal input that must
@@ -68,69 +158,32 @@ METS_FILES_SCHEMA = StructType(
 )
 
 
+def extract_row(html, max_doc_bytes: Optional[int] = None) -> list[tuple]:
+    """html -> (text, spans, error), routed per document kind
+    (PAGE-XML reading-order walk, HTML boilerplate strip, METS -> error
+    row; extract.extract_any_document). ``max_doc_bytes`` guards
+    executor memory at crawl scale: a pathological multi-GB document
+    becomes an error row instead of an OOM-killed worker."""
+    data = as_bytes(html)
+    if max_doc_bytes is not None and len(data) > max_doc_bytes:
+        return [(None, None, f"document too large: {len(data)} > max_doc_bytes={max_doc_bytes}")]
+    result = extract_any_document(data)
+    return [(result["text"], result["spans"], result["error"])]
+
+
 def extract_batch(pdf: pd.DataFrame, max_doc_bytes: Optional[int] = None) -> pd.DataFrame:
-    """One Arrow batch of (url, html) -> (url, text, spans, error).
-
-    Routes per document kind (PAGE-XML reading-order walk, HTML
-    boilerplate strip, METS -> error row; extract.extract_any_document).
-    ``max_doc_bytes`` guards executor memory at crawl scale: a
-    pathological multi-GB document becomes an error row instead of an
-    OOM-killed worker."""
-    out = {"url": [], "text": [], "spans": [], "error": []}
-    for url, html in zip(pdf["url"], pdf["html"]):
-        data = bytes(html) if html is not None else b""
-        if max_doc_bytes is not None and len(data) > max_doc_bytes:
-            out["url"].append(url)
-            out["text"].append(None)
-            out["spans"].append(None)
-            out["error"].append(
-                f"document too large: {len(data)} > max_doc_bytes={max_doc_bytes}"
-            )
-            continue
-        result = extract_any_document(data)
-        out["url"].append(url)
-        out["text"].append(result["text"])
-        out["spans"].append(result["spans"])
-        out["error"].append(result["error"])
-    return pd.DataFrame(out)
+    """One Arrow batch of (url, html) -> (url, text, spans, error)."""
+    return row_batch(partial(extract_row, max_doc_bytes=max_doc_bytes), EXTRACTED_SCHEMA)(pdf)
 
 
-def extract_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        yield extract_batch(pdf)
-
-
-def extract_kernel_factory(max_doc_bytes: Optional[int] = None):
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield extract_batch(pdf, max_doc_bytes=max_doc_bytes)
-
-    return kernel
-
-
-def mets_kernel_factory(use: str = "", file_id: str = "", mimetype: str = ""):
-    """METS file-resolution kernel (Mets.Find, mets/mets.go:53-59) with
-    the predicate pushed into the tree walk — rows that match nothing
-    emit nothing (UDTF-shaped)."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("url", "file_id", "mimetype", "flocat_type", "flocat_url")}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                for rec in mets_records(
-                    bytes(html) if html is not None else b"",
-                    use=use,
-                    file_id=file_id,
-                    mimetype=mimetype,
-                ):
-                    out["url"].append(url)
-                    out["file_id"].append(rec["file_id"])
-                    out["mimetype"].append(rec["mimetype"])
-                    out["flocat_type"].append(rec["flocat_type"])
-                    out["flocat_url"].append(rec["flocat_url"])
-            yield pd.DataFrame(out)
-
-    return kernel
+def mets_rows(html, use: str = "", file_id: str = "", mimetype: str = "") -> list[tuple]:
+    """METS file resolution (Mets.Find, mets/mets.go:53-59) with the
+    predicate pushed into the tree walk — rows that match nothing emit
+    nothing (UDTF-shaped)."""
+    return [
+        (rec["file_id"], rec["mimetype"], rec["flocat_type"], rec["flocat_url"])
+        for rec in mets_records(as_bytes(html), use=use, file_id=file_id, mimetype=mimetype)
+    ]
 
 
 PAGE_META_SCHEMA = StructType(
@@ -149,41 +202,22 @@ PAGE_META_SCHEMA = StructType(
     ]
 )
 
-_PAGE_META_FIELDS = (
-    "title", "description", "canonical_url", "og_title",
-    "lang_attr", "robots", "noindex", "nofollow", "error",
+_PAGE_META_FIELDS = PAGE_META_SCHEMA.fieldNames()[2:]
+
+
+def page_meta_row(html) -> list[tuple]:
+    """html -> head metadata columns (htmlextract.page_meta)."""
+    meta = page_meta(as_bytes(html))
+    return [tuple(meta[k] for k in _PAGE_META_FIELDS)]
+
+
+# (url, html) -> (url, <head metadata>): the resumable job's metadata
+# side table; page_meta_kernel adds warc_ts_epoch as a second key
+page_meta_batch = row_batch(
+    page_meta_row,
+    StructType([f for f in PAGE_META_SCHEMA.fields if f.name != "warc_ts_epoch"]),
 )
-
-
-def page_meta_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    """One batch of (url, html) -> head metadata columns
-    (htmlextract.page_meta) — shared by the streaming query surface
-    (page_meta_kernel) and the resumable job's metadata side table."""
-    from .htmlextract import page_meta
-
-    out: dict[str, list] = {"url": []}
-    out.update({k: [] for k in _PAGE_META_FIELDS})
-    for url, html in zip(pdf["url"], pdf["html"]):
-        meta = page_meta(bytes(html) if html is not None else b"")
-        out["url"].append(url)
-        for k in _PAGE_META_FIELDS:
-            out[k].append(meta[k])
-    return pd.DataFrame(out)
-
-
-def page_meta_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """(url, warc_ts_epoch, html) -> head metadata per page
-    (htmlextract.page_meta). Narrow map, no shuffle: metadata extraction
-    shares extraction's scan so at crawl scale it rides the same
-    partitioning; payload bytes never leave the task."""
-    for pdf in batches:
-        out = page_meta_batch(pdf)
-        out.insert(
-            1,
-            "warc_ts_epoch",
-            [None if pd.isna(ts) else int(ts) for ts in pdf["warc_ts_epoch"]],
-        )
-        yield out
+page_meta_kernel = row_kernel(page_meta_row, PAGE_META_SCHEMA, keys=("url", "warc_ts_epoch"))
 
 
 def salted_partition_key(salt: int = 42):
@@ -214,31 +248,21 @@ FEED_ITEMS_SCHEMA = StructType(
 )
 
 
-def feed_items_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """(url, html) -> one row per feed ITEM (gocrd_spark.feed.parse_feed);
+def feed_item_rows(html) -> list[tuple]:
+    """html -> one row per feed ITEM (gocrd_spark.feed.parse_feed);
     non-feed / unparseable payloads emit one all-null row with the error
-    string (absence is data, same contract as page_meta_kernel). Narrow
-    map, no shuffle; item fan-out happens inside the task."""
-    from .feed import parse_feed
+    string (absence is data, same contract as page_meta_row)."""
+    parsed = parse_feed(as_bytes(html))
+    head = (parsed["feed_type"], parsed["feed_title"])
+    if not parsed["items"]:
+        return [head + (None,) * 5 + (parsed["error"],)]
+    return [
+        head + (it["idx"], it["title"], it["link"], it["published"], it["summary"], parsed["error"])
+        for it in parsed["items"]
+    ]
 
-    cols = list(FEED_ITEMS_SCHEMA.fieldNames())
-    for pdf in batches:
-        out: dict[str, list] = {k: [] for k in cols}
-        for url, html in zip(pdf["url"], pdf["html"]):
-            parsed = parse_feed(bytes(html) if html is not None else b"")
-            rows = parsed["items"] or [None]
-            for item in rows:
-                out["url"].append(url)
-                out["feed_type"].append(parsed["feed_type"])
-                out["feed_title"].append(parsed["feed_title"])
-                out["item_idx"].append(None if item is None else item["idx"])
-                out["item_title"].append(None if item is None else item["title"])
-                out["item_link"].append(None if item is None else item["link"])
-                out["item_published"].append(None if item is None else item["published"])
-                out["item_summary"].append(None if item is None else item["summary"])
-                out["error"].append(parsed["error"])
-        yield pd.DataFrame(out)
 
+feed_items_kernel = row_kernel(feed_item_rows, FEED_ITEMS_SCHEMA)
 
 SITEMAP_URLS_SCHEMA = StructType(
     [
@@ -254,29 +278,20 @@ SITEMAP_URLS_SCHEMA = StructType(
 )
 
 
-def sitemap_urls_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """(url, html) -> one row per sitemap ENTRY (feed.parse_sitemap);
-    non-sitemap payloads emit one all-null row with the error string.
-    Narrow map, no shuffle — same contract as feed_items_kernel."""
-    from .feed import parse_sitemap
+def sitemap_entry_rows(html) -> list[tuple]:
+    """html -> one row per sitemap ENTRY (feed.parse_sitemap);
+    non-sitemap payloads emit one all-null row with the error string."""
+    parsed = parse_sitemap(as_bytes(html))
+    if not parsed["entries"]:
+        return [(parsed["kind"],) + (None,) * 5 + (parsed["error"],)]
+    return [
+        (parsed["kind"], e["idx"], e["loc"], e["lastmod"], e["changefreq"], e["priority"],
+         parsed["error"])
+        for e in parsed["entries"]
+    ]
 
-    cols = list(SITEMAP_URLS_SCHEMA.fieldNames())
-    for pdf in batches:
-        out: dict[str, list] = {k: [] for k in cols}
-        for url, html in zip(pdf["url"], pdf["html"]):
-            parsed = parse_sitemap(bytes(html) if html is not None else b"")
-            rows = parsed["entries"] or [None]
-            for ent in rows:
-                out["url"].append(url)
-                out["kind"].append(parsed["kind"])
-                out["entry_idx"].append(None if ent is None else ent["idx"])
-                out["loc"].append(None if ent is None else ent["loc"])
-                out["lastmod"].append(None if ent is None else ent["lastmod"])
-                out["changefreq"].append(None if ent is None else ent["changefreq"])
-                out["priority"].append(None if ent is None else ent["priority"])
-                out["error"].append(parsed["error"])
-        yield pd.DataFrame(out)
 
+sitemap_urls_kernel = row_kernel(sitemap_entry_rows, SITEMAP_URLS_SCHEMA)
 
 HTML_TABLES_SCHEMA = StructType(
     [
@@ -290,28 +305,17 @@ HTML_TABLES_SCHEMA = StructType(
 )
 
 
-def html_tables_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """(url, html) -> one row per table CELL (gocrd_spark.htmlextract.
-    extract_tables): (url, table_idx, row_idx, col_idx, is_header,
-    cell). Pages without tables contribute zero rows — absence is
-    data. Narrow map, no shuffle; the cell fan-out happens inside the
-    task, payload bytes never move."""
-    from .htmlextract import extract_tables
+def table_cell_rows(html) -> list[tuple]:
+    """html -> one row per table CELL (htmlextract.extract_tables):
+    (table_idx, row_idx, col_idx, is_header, cell). Pages without tables
+    contribute zero rows — absence is data."""
+    return [
+        (c["table_idx"], c["row_idx"], c["col_idx"], c["is_header"], c["cell"])
+        for c in extract_tables(as_bytes(html))["cells"]
+    ]
 
-    cols = list(HTML_TABLES_SCHEMA.fieldNames())
-    for pdf in batches:
-        out: dict[str, list] = {k: [] for k in cols}
-        for url, html in zip(pdf["url"], pdf["html"]):
-            parsed = extract_tables(bytes(html) if html is not None else b"")
-            for cell in parsed["cells"]:
-                out["url"].append(url)
-                out["table_idx"].append(cell["table_idx"])
-                out["row_idx"].append(cell["row_idx"])
-                out["col_idx"].append(cell["col_idx"])
-                out["is_header"].append(cell["is_header"])
-                out["cell"].append(cell["cell"])
-        yield pd.DataFrame(out)
 
+html_tables_kernel = row_kernel(table_cell_rows, HTML_TABLES_SCHEMA)
 
 JSONLD_BLOCKS_SCHEMA = StructType(
     [
@@ -322,19 +326,11 @@ JSONLD_BLOCKS_SCHEMA = StructType(
 )
 
 
-def jsonld_blocks_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """(url, html) -> one row per <script type=application/ld+json>
-    block (url, block_idx, json raw text). Pages without structured
-    data contribute zero rows. Narrow map, no shuffle."""
-    from .htmlextract import extract_jsonld
+def jsonld_block_rows(html) -> list[tuple]:
+    """html -> one row per <script type=application/ld+json> block
+    (block_idx, json raw text). Pages without structured data
+    contribute zero rows."""
+    return list(enumerate(extract_jsonld(as_bytes(html))["blocks"]))
 
-    cols = list(JSONLD_BLOCKS_SCHEMA.fieldNames())
-    for pdf in batches:
-        out: dict[str, list] = {k: [] for k in cols}
-        for url, html in zip(pdf["url"], pdf["html"]):
-            parsed = extract_jsonld(bytes(html) if html is not None else b"")
-            for i, block in enumerate(parsed["blocks"]):
-                out["url"].append(url)
-                out["block_idx"].append(i)
-                out["json"].append(block)
-        yield pd.DataFrame(out)
+
+jsonld_blocks_kernel = row_kernel(jsonld_block_rows, JSONLD_BLOCKS_SCHEMA)

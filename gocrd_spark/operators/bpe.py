@@ -37,10 +37,10 @@ never this module.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..kernel import row_kernel
 
 END = "</w>"  # end-of-word marker: lets BPE learn whole-word tokens
 
@@ -315,40 +315,32 @@ def bpe_encode(
 ) -> DataFrame:
     """Tokenize every document with a learned merge list. The merge
     table ships inside the Arrow kernel closure (it is vocabulary-
-    sized); per batch a word->tokens cache collapses the heavy repeat
+    sized); per partition a word->tokens cache collapses the heavy repeat
     structure of real text. Returns (doc_id, n_tokens,
     n_unique_tokens)."""
     import re
-
-    import pandas as pd
 
     ranks = {(left, right): rank for rank, left, right in merges}
     # re.ASCII: match the JVM training side's \s (Java \s is ASCII-only;
     # Python str.split() would also split on U+00A0 etc.)
     ws = re.compile(r"\s+", re.ASCII)
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        cache: dict[str, list[str]] = {}
-        for batch in batches:
-            out = {"doc_id": [], "n_tokens": [], "n_unique_tokens": []}
-            for _, r in batch.iterrows():
-                text = r["text"] or ""
-                if lowercase:
-                    text = text.lower()
-                n_tokens = 0
-                uniq: set[str] = set()
-                for word in ws.split(text):
-                    if not word:
-                        continue
-                    toks = cache.get(word)
-                    if toks is None:
-                        toks = _encode_word(word, ranks)
-                        cache[word] = toks
-                    n_tokens += len(toks)
-                    uniq.update(toks)
-                out["doc_id"].append(r["doc_id"])
-                out["n_tokens"].append(n_tokens)
-                out["n_unique_tokens"].append(len(uniq))
-            yield pd.DataFrame(out)
+    def encode_row(cache: dict[str, list[str]], text):
+        text = text or ""
+        if lowercase:
+            text = text.lower()
+        n_tokens = 0
+        uniq: set[str] = set()
+        for word in ws.split(text):
+            if not word:
+                continue
+            toks = cache.get(word)
+            if toks is None:
+                toks = _encode_word(word, ranks)
+                cache[word] = toks
+            n_tokens += len(toks)
+            uniq.update(toks)
+        return [(n_tokens, len(uniq))]
 
-    return docs.select("doc_id", "text").mapInPandas(gen, ENCODE_SCHEMA)
+    kernel = row_kernel(encode_row, ENCODE_SCHEMA, keys=("doc_id",), args=("text",), state=dict)
+    return docs.select("doc_id", "text").mapInPandas(kernel, ENCODE_SCHEMA)

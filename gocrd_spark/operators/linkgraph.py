@@ -31,11 +31,12 @@ host key — the same profile as the cluster-resolution loop.
 from __future__ import annotations
 
 from html.parser import HTMLParser
-from typing import Iterator
 from urllib.parse import urljoin
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..kernel import row_kernel
 
 PAGERANK_SCALE = 10**12
 
@@ -125,35 +126,15 @@ def extract_outlinks(
     (src_url, dst_url, href, anchor), document order within a page.
     Narrow mapInPandas — the plan is Scan -> MapInPandas like the
     extraction flagship; pages without links emit nothing."""
-    import pandas as pd
-
     sel = pages.select(
         F.col(url_col).alias("url"), F.col(html_col).alias("html")
     )
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for batch in batches:
-            rows = []
-            for _, r in batch.iterrows():
-                raw = r["html"]
-                if raw is None:
-                    continue
-                for dst, href, anchor in parse_outlinks(
-                    str(r["url"]), bytes(raw)
-                ):
-                    rows.append(
-                        {
-                            "src_url": r["url"],
-                            "dst_url": dst,
-                            "href": href,
-                            "anchor": anchor,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["src_url", "dst_url", "href", "anchor"]
-            )
+    def outlink_rows(url, raw):
+        return [] if raw is None else parse_outlinks(str(url), bytes(raw))
 
-    return sel.mapInPandas(gen, OUTLINKS_SCHEMA)
+    kernel = row_kernel(outlink_rows, OUTLINKS_SCHEMA, args=("url", "html"))
+    return sel.mapInPandas(kernel, OUTLINKS_SCHEMA)
 
 
 def host_edges(outlinks: DataFrame) -> DataFrame:

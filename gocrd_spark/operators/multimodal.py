@@ -20,13 +20,14 @@ need.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..kernel import row_kernel
 
 FEATURE_DIM = 16
 
@@ -58,38 +59,19 @@ def decode_image(payload: bytes, fake: bool = False) -> np.ndarray:
     return np.frombuffer(digest * 6, dtype=np.uint8)[: 8 * 8 * 3].reshape(8, 8, 3)
 
 
-def extract_features_batch(pdf: pd.DataFrame, fake: bool = True) -> pd.DataFrame:
-    """One Arrow batch of media rows -> feature rows. Per-payload errors
-    become error rows (the pipeline-wide tolerance contract)."""
-    out = {"id": [], "kind": [], "feature": [], "width": [], "height": [], "error": []}
-    for row in pdf.itertuples(index=False):
-        out["id"].append(row.id)
-        out["kind"].append(row.kind)
-        try:
-            img = decode_image(bytes(row.payload), fake=fake)
-            # fake "feature": per-channel means over a 16-cell grid flattened
-            feat = img.reshape(-1, 3).mean(axis=0)
-            feature = np.tile(feat, FEATURE_DIM // 3 + 1)[:FEATURE_DIM] / 255.0
-            out["feature"].append([float(x) for x in feature])
-            out["width"].append(img.shape[1])
-            out["height"].append(img.shape[0])
-            out["error"].append(None)
-        except Exception as exc:
-            out["feature"].append(None)
-            out["width"].append(None)
-            out["height"].append(None)
-            out["error"].append(f"{type(exc).__name__}: {exc}")
-    return pd.DataFrame(out)
-
-
 def extract_features(media: DataFrame, fake: bool = True) -> DataFrame:
     """Feature extraction over a multimodal table: mapInPandas kernel,
-    payload column pruned in, features out."""
+    payload column pruned in, features out. Per-payload errors become
+    error rows (the pipeline-wide tolerance contract)."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield extract_features_batch(pdf, fake=fake)
+    def feature_row(payload):
+        img = decode_image(bytes(payload), fake=fake)
+        # fake "feature": per-channel means over a 16-cell grid flattened
+        feat = img.reshape(-1, 3).mean(axis=0)
+        feature = np.tile(feat, FEATURE_DIM // 3 + 1)[:FEATURE_DIM] / 255.0
+        return [([float(x) for x in feature], img.shape[1], img.shape[0], None)]
 
+    kernel = row_kernel(feature_row, FEATURES_SCHEMA, keys=("id", "kind"), args=("payload",))
     return media.select("id", "kind", "payload").mapInPandas(kernel, FEATURES_SCHEMA)
 
 
@@ -106,34 +88,15 @@ def resize_image(img: np.ndarray, width: int, height: int) -> np.ndarray:
 RESIZED_SCHEMA = "id long, width int, height int, mean_r long, mean_g long, mean_b long, error string"
 
 
-def resize_batch(pdf: pd.DataFrame, width: int, height: int, fake: bool = True) -> pd.DataFrame:
-    out = {"id": [], "width": [], "height": [], "mean_r": [], "mean_g": [],
-           "mean_b": [], "error": []}
-    for row in pdf.itertuples(index=False):
-        out["id"].append(row.id)
-        try:
-            img = resize_image(decode_image(bytes(row.payload), fake=fake), width, height)
-            means = img.reshape(-1, 3).mean(axis=0)
-            out["width"].append(img.shape[1])
-            out["height"].append(img.shape[0])
-            out["mean_r"].append(int(means[0]))
-            out["mean_g"].append(int(means[1]))
-            out["mean_b"].append(int(means[2]))
-            out["error"].append(None)
-        except Exception as exc:
-            for k in ("width", "height", "mean_r", "mean_g", "mean_b"):
-                out[k].append(None)
-            out["error"].append(f"{type(exc).__name__}: {exc}")
-    return pd.DataFrame(out)
-
-
 def resize_images(media: DataFrame, width: int = 4, height: int = 4, fake: bool = True) -> DataFrame:
     """Resize pass over a multimodal table (mapInPandas; payload pruned in)."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield resize_batch(pdf, width, height, fake=fake)
+    def resize_row(payload):
+        img = resize_image(decode_image(bytes(payload), fake=fake), width, height)
+        means = img.reshape(-1, 3).mean(axis=0)
+        return [(img.shape[1], img.shape[0], int(means[0]), int(means[1]), int(means[2]), None)]
 
+    kernel = row_kernel(resize_row, RESIZED_SCHEMA, keys=("id",), args=("payload",))
     return media.select("id", "payload").mapInPandas(kernel, RESIZED_SCHEMA)
 
 
@@ -148,34 +111,22 @@ def sample_frames(media: DataFrame, every_n: int = 3, max_frames: int = 5,
     sequence from the payload hash; real decoding swaps in behind the
     same row contract."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"id": [], "frame_idx": [], "frame_hash": [], "error": []}
-            for row in pdf.itertuples(index=False):
-                try:
-                    if not fake:
-                        raise NotImplementedError(
-                            "video decoding requires a media library; "
-                            "not available in this environment"
-                        )
-                    payload = bytes(row.payload)
-                    n_frames = 1 + len(payload) % 20  # deterministic fake length
-                    for idx in range(0, n_frames, every_n)[:max_frames]:
-                        out["id"].append(row.id)
-                        out["frame_idx"].append(idx)
-                        # ASCII ':idx' suffix (not packed bytes) so the
-                        # DuckDB oracle can recompute the hash over VARCHAR
-                        out["frame_hash"].append(
-                            hashlib.sha256(payload + f":{idx}".encode()).hexdigest()[:16]
-                        )
-                        out["error"].append(None)
-                except Exception as exc:
-                    out["id"].append(row.id)
-                    out["frame_idx"].append(None)
-                    out["frame_hash"].append(None)
-                    out["error"].append(f"{type(exc).__name__}: {exc}")
-            yield pd.DataFrame(out)
+    def frame_rows(payload):
+        if not fake:
+            raise NotImplementedError(
+                "video decoding requires a media library; "
+                "not available in this environment"
+            )
+        payload = bytes(payload)
+        n_frames = 1 + len(payload) % 20  # deterministic fake length
+        # ASCII ':idx' suffix (not packed bytes) so the DuckDB oracle
+        # can recompute the hash over VARCHAR
+        return [
+            (idx, hashlib.sha256(payload + f":{idx}".encode()).hexdigest()[:16], None)
+            for idx in range(0, n_frames, every_n)[:max_frames]
+        ]
 
+    kernel = row_kernel(frame_rows, FRAMES_SCHEMA, keys=("id",), args=("payload",))
     return media.select("id", "payload").mapInPandas(kernel, FRAMES_SCHEMA)
 
 
@@ -356,24 +307,10 @@ def phash_images(media: DataFrame) -> DataFrame:
     pruned in, 8-byte hash out — at 100 TB the shuffle-facing output is
     (long, long) rows; payload bytes never leave the scan stage."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"id": [], "phash": [], "error": []}
-            for row in pdf.itertuples(index=False):
-                out["id"].append(row.id)
-                try:
-                    img = decode_ppm(bytes(row.payload))
-                    out["phash"].append(phash64(img))
-                    out["error"].append(None)
-                except Exception as exc:
-                    out["phash"].append(None)
-                    out["error"].append(f"{type(exc).__name__}: {exc}")
-            # nullable Int64, NOT a plain list: one None in the batch
-            # would coerce the column to float64 and silently zero the
-            # low ~11 bits of every 64-bit hash (53-bit mantissa)
-            out["phash"] = pd.array(out["phash"], dtype="Int64")
-            yield pd.DataFrame(out)
+    def phash_row(payload):
+        return [(phash64(decode_ppm(bytes(payload))), None)]
 
+    kernel = row_kernel(phash_row, PHASH_SCHEMA, keys=("id",), args=("payload",))
     return media.select("id", "payload").mapInPandas(kernel, PHASH_SCHEMA)
 
 

@@ -19,7 +19,7 @@ Parser scope (spec-derived, documented like pdfparse's):
 
 Spark surface: ``robots_filter(urls, robots)`` joins each URL with its
 host's robots bytes and evaluates in an Arrow batch kernel that parses
-+ compiles each host's rules ONCE per batch (per-host cache) — the
++ compiles each host's rules ONCE per partition (per-host cache) — the
 same mapInPandas shape as the extraction kernels; hosts without a
 robots row are allowed (a missing robots.txt permits crawling). The
 join ships (host, robots bytes) — robots files are KB-sized; URL
@@ -29,10 +29,11 @@ payloads never widen.
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..kernel import row_kernel
 
 ROBOTS_SCHEMA = "id long, url string, allowed long, matched_rule string"
 
@@ -131,10 +132,9 @@ def robots_filter(
     broadcast when small, hash join on host otherwise; either way the
     exchange carries hosts and robots bytes, never widened URL rows on
     the build side), then an Arrow kernel parses + compiles each
-    distinct robots text once per batch and evaluates paths. Hosts with
+    distinct robots text once per partition and evaluates paths. Hosts with
     no robots row are allowed. Returns (id, url, allowed 0/1,
     matched_rule)."""
-    import pandas as pd
     from urllib.parse import urlsplit
 
     keyed = urls.select(
@@ -149,36 +149,28 @@ def robots_filter(
         "left",
     )
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        rules_cache: dict[bytes, list] = {}
-        for batch in batches:
-            out = {"id": [], "url": [], "allowed": [], "matched_rule": []}
-            for _, r in batch.iterrows():
-                url = r["url"]
-                blob = r["robots"]
-                if blob is None:
-                    allowed, rule = True, None
-                else:
-                    blob = bytes(blob)
-                    rules = rules_cache.get(blob)
-                    if rules is None:
-                        rules = compile_rules(parse_robots(blob, user_agent))
-                        rules_cache[blob] = rules
-                    try:
-                        split = urlsplit(url)
-                        path = split.path or "/"
-                        if split.query:
-                            path += "?" + split.query
-                    except ValueError:
-                        path = "/"
-                    allowed, rule = evaluate(rules, path)
-                out["id"].append(r["id"])
-                out["url"].append(url)
-                out["allowed"].append(1 if allowed else 0)
-                out["matched_rule"].append(rule)
-            yield pd.DataFrame(out)
+    def filter_row(rules_cache: dict[bytes, list], url, blob):
+        if blob is None:
+            return [(1, None)]
+        blob = bytes(blob)
+        rules = rules_cache.get(blob)
+        if rules is None:
+            rules = compile_rules(parse_robots(blob, user_agent))
+            rules_cache[blob] = rules
+        try:
+            split = urlsplit(url)
+            path = split.path or "/"
+            if split.query:
+                path += "?" + split.query
+        except ValueError:
+            path = "/"
+        allowed, rule = evaluate(rules, path)
+        return [(1 if allowed else 0, rule)]
 
-    return keyed.select("id", "url", "robots").mapInPandas(gen, ROBOTS_SCHEMA)
+    kernel = row_kernel(
+        filter_row, ROBOTS_SCHEMA, keys=("id", "url"), args=("url", "robots"), state=dict
+    )
+    return keyed.select("id", "url", "robots").mapInPandas(kernel, ROBOTS_SCHEMA)
 
 
 def robots_sitemaps(robots_by_host) -> "DataFrame":
@@ -266,34 +258,17 @@ def robots_crawl_delays(robots: "DataFrame", user_agent: str = "*") -> "DataFram
     """Per-host politeness table: (host, crawl_delay_ms BIGINT or NULL)
     from each host's robots bytes — the rate input a frontier scheduler
     pairs with frontier_waves' concurrency bound. Arrow kernel with the
-    per-batch parsed cache (robots_filter's discipline); narrow map,
+    per-partition parsed cache (robots_filter's discipline); narrow map,
     zero shuffle."""
-    import pandas as pd
+    schema = "host string, crawl_delay_ms long"
 
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
+    def delay_row(cache: dict[bytes, object], blob):
+        if blob is None:
+            return [(None,)]
+        blob = bytes(blob)
+        if blob not in cache:
+            cache[blob] = crawl_delay(blob, user_agent)
+        return [(cache[blob],)]
 
-    schema = StructType(
-        [
-            StructField("host", StringType()),
-            StructField("crawl_delay_ms", LongType()),
-        ]
-    )
-
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        cache: dict[bytes, object] = {}
-        for batch in batches:
-            out = {"host": [], "crawl_delay_ms": []}
-            for host, blob in zip(batch["host"], batch["robots"]):
-                ms = None
-                if blob is not None:
-                    blob = bytes(blob)
-                    if blob in cache:
-                        ms = cache[blob]
-                    else:
-                        ms = crawl_delay(blob, user_agent)
-                        cache[blob] = ms
-                out["host"].append(host)
-                out["crawl_delay_ms"].append(ms)
-            yield pd.DataFrame(out)
-
-    return robots.select("host", "robots").mapInPandas(gen, schema)
+    kernel = row_kernel(delay_row, schema, keys=("host",), args=("robots",), state=dict)
+    return robots.select("host", "robots").mapInPandas(kernel, schema)

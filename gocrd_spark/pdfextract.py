@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import hashlib
 import random
-from typing import Any, Iterator
+from typing import Any
 
 from .spans import assemble
 
@@ -84,23 +84,14 @@ def extract_pdfs(df) -> "Any":
     """Spark surface: (doc_id, pdf binary) -> (doc_id, text, n_blocks,
     error) via an Arrow batch kernel (same tolerance contract as the XML
     kernel: a bad document is an error row, never a job failure)."""
-    import pandas as pd
+    from .kernel import row_kernel
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            out = {"doc_id": [], "text": [], "n_blocks": [], "error": []}
-            for row in pdf.itertuples(index=False):
-                if row.pdf is None:  # NULL payload -> error row, never a crash
-                    res = {"text": None, "spans": None,
-                           "error": "ValueError: null pdf payload"}
-                else:
-                    res = extract_pdf(bytes(row.pdf))
-                out["doc_id"].append(row.doc_id)
-                out["text"].append(res["text"])
-                out["n_blocks"].append(
-                    len(res["spans"]) if res["spans"] is not None else None
-                )
-                out["error"].append(res["error"])
-            yield pd.DataFrame(out)
+    def pdf_row(payload):
+        if payload is None:  # the scaffold turns this into an error row
+            raise ValueError("null pdf payload")
+        res = extract_pdf(bytes(payload))
+        n_blocks = len(res["spans"]) if res["spans"] is not None else None
+        return [(res["text"], n_blocks, res["error"])]
 
+    kernel = row_kernel(pdf_row, PDF_EXTRACTED_SCHEMA, keys=("doc_id",), args=("pdf",))
     return df.select("doc_id", "pdf").mapInPandas(kernel, PDF_EXTRACTED_SCHEMA)

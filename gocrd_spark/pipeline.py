@@ -5,7 +5,7 @@ Shape (SURVEY.md §3.2, §4.3-§4.4): one columnar narrow map.
     pages (Iceberg/parquet scan; column-pruned to url+html,
            partition-pruned on warc_ts)
       -> [optional] salted repartition by xxhash64(url, salt)   # the ONE wide shuffle
-      -> mapInPandas(extract_kernel)                            # Arrow batches, zero per-row Python
+      -> mapInPandas(row_kernel(extract_row))                   # Arrow batches, zero per-row Python
       -> parquet/Iceberg sink (resumable mode: executor-side
          per-commit-group writes + commit log)
 
@@ -24,6 +24,7 @@ import json
 import os
 import time
 import uuid
+from functools import partial
 from typing import Iterator, Optional
 
 import pandas as pd
@@ -31,8 +32,27 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .kernel import EXTRACTED_SCHEMA, METS_FILES_SCHEMA, extract_batch, extract_kernel
-from .kernel import group_id, mets_kernel_factory
+from .kernel import (
+    EXTRACTED_SCHEMA,
+    FEED_ITEMS_SCHEMA,
+    HTML_TABLES_SCHEMA,
+    JSONLD_BLOCKS_SCHEMA,
+    METS_FILES_SCHEMA,
+    PAGE_META_SCHEMA,
+    SITEMAP_URLS_SCHEMA,
+    extract_batch,
+    extract_row,
+    feed_items_kernel,
+    group_id,
+    html_tables_kernel,
+    jsonld_blocks_kernel,
+    mets_rows,
+    page_meta_batch,
+    page_meta_kernel,
+    row_kernel,
+    salted_partition_key,
+    sitemap_urls_kernel,
+)
 
 
 def load_pages(
@@ -133,11 +153,7 @@ def extract_pages(
     ``max_doc_bytes`` converts pathologically large payloads into error
     rows before parsing (executor OOM guard).
     """
-    from .kernel import extract_kernel_factory, salted_partition_key
-
-    kernel = (
-        extract_kernel_factory(max_doc_bytes) if max_doc_bytes else extract_kernel
-    )
+    kernel = row_kernel(partial(extract_row, max_doc_bytes=max_doc_bytes or None), EXTRACTED_SCHEMA)
     sel = df.select("url", "html")
     if oversize_bytes:
         key = salted_partition_key(salt)
@@ -164,35 +180,21 @@ def extract_pages(
     return sel.mapInPandas(kernel, EXTRACTED_SCHEMA)
 
 
-def page_metadata(
-    df: DataFrame,
-    salt: int = 42,
-    num_partitions: Optional[int] = None,
-) -> DataFrame:
+def page_metadata(df: DataFrame) -> DataFrame:
     """Head-metadata extraction tier: (url, warc_ts, html) ->
     (url, warc_ts_epoch, title, description, canonical_url, og_title,
     lang_attr, robots, noindex, nofollow, error) via the page_meta
     Arrow batch kernel (htmlextract._MetaParser). Same plan shape as
-    extract_pages: column-pruned scan -> narrow mapInPandas; optional
-    salted repartition for skewed inputs. Non-HTML payloads (PAGE-XML,
-    METS, garbage) produce all-null metadata rows, not errors — at
-    crawl scale absence of a <title> is data the curation tier filters
-    on, not a failure path."""
-    from .kernel import PAGE_META_SCHEMA, page_meta_kernel, salted_partition_key
-
-    sel = df.select(
+    extract_pages: column-pruned scan -> narrow mapInPandas. Non-HTML
+    payloads (PAGE-XML, METS, garbage) produce all-null metadata rows,
+    not errors — at crawl scale absence of a <title> is data the
+    curation tier filters on, not a failure path."""
+    return df.select(
         "url", F.unix_timestamp("warc_ts").alias("warc_ts_epoch"), "html"
-    )
-    if num_partitions:
-        sel = sel.repartition(num_partitions, salted_partition_key(salt))
-    return sel.mapInPandas(page_meta_kernel, PAGE_META_SCHEMA)
+    ).mapInPandas(page_meta_kernel, PAGE_META_SCHEMA)
 
 
-def feed_items(
-    df: DataFrame,
-    salt: int = 42,
-    num_partitions: Optional[int] = None,
-) -> DataFrame:
+def feed_items(df: DataFrame) -> DataFrame:
     """Syndication extraction tier: (url, html) -> one row per RSS/Atom
     feed ITEM (url, feed_type, feed_title, item_idx, item_title,
     item_link, item_published, item_summary, error) via the
@@ -203,31 +205,17 @@ def feed_items(
     bytes never move. Non-feed payloads produce one all-null row with
     the error string — at crawl scale "not a feed" is data the
     discovery tier filters on, not a failure path."""
-    from .kernel import FEED_ITEMS_SCHEMA, feed_items_kernel, salted_partition_key
-
-    sel = df.select("url", "html")
-    if num_partitions:
-        sel = sel.repartition(num_partitions, salted_partition_key(salt))
-    return sel.mapInPandas(feed_items_kernel, FEED_ITEMS_SCHEMA)
+    return df.select("url", "html").mapInPandas(feed_items_kernel, FEED_ITEMS_SCHEMA)
 
 
-def sitemap_urls(
-    df: DataFrame,
-    salt: int = 42,
-    num_partitions: Optional[int] = None,
-) -> DataFrame:
+def sitemap_urls(df: DataFrame) -> DataFrame:
     """Sitemap-protocol extraction tier: (url, html) -> one row per
     <urlset>/<sitemapindex> entry (url, kind, entry_idx, loc, lastmod,
     changefreq, priority, error) via the sitemap_urls_kernel Arrow batch
     kernel (gocrd_spark/feed.py::parse_sitemap, the namespace-blind
     xmlwalk walker). Same narrow no-shuffle plan shape as feed_items;
     chain after robots_sitemaps discovery to seed the frontier."""
-    from .kernel import SITEMAP_URLS_SCHEMA, salted_partition_key, sitemap_urls_kernel
-
-    sel = df.select("url", "html")
-    if num_partitions:
-        sel = sel.repartition(num_partitions, salted_partition_key(salt))
-    return sel.mapInPandas(sitemap_urls_kernel, SITEMAP_URLS_SCHEMA)
+    return df.select("url", "html").mapInPandas(sitemap_urls_kernel, SITEMAP_URLS_SCHEMA)
 
 
 def mets_files(
@@ -240,9 +228,9 @@ def mets_files(
     flat-map from pages to matched file entries; empty predicate fields
     are wildcards. Predicate evaluated inside the tree walk (the
     reference pushes filters into its XPath the same way)."""
+    rows = partial(mets_rows, use=use, file_id=file_id, mimetype=mimetype)
     return df.select("url", "html").mapInPandas(
-        mets_kernel_factory(use=use, file_id=file_id, mimetype=mimetype),
-        METS_FILES_SCHEMA,
+        row_kernel(rows, METS_FILES_SCHEMA), METS_FILES_SCHEMA
     )
 
 
@@ -451,8 +439,6 @@ def run_extract_job(
                 writer.write_table(pa.Table.from_pandas(result, schema=arrow_schema,
                                                         preserve_index=False))
                 if emit_meta:
-                    from .kernel import page_meta_batch
-
                     meta_writers[g][0].write_table(
                         pa.Table.from_pandas(
                             page_meta_batch(grp), schema=meta_schema,
@@ -670,30 +656,17 @@ def golden_compare(extracted: DataFrame, golden: DataFrame) -> DataFrame:
     )
 
 
-def html_tables(
-    df: DataFrame,
-    salt: int = 42,
-    num_partitions: Optional[int] = None,
-) -> DataFrame:
+def html_tables(df: DataFrame) -> DataFrame:
     """Structured-data mining tier: (url, html) -> one row per <table>
     CELL (url, table_idx, row_idx, col_idx, is_header, cell) via the
     html_tables_kernel Arrow batch kernel (htmlextract._TableParser —
     tag-soup-tolerant implied closes, nested-table isolation). Same
     column-pruned scan -> narrow mapInPandas plan shape as
     page_metadata/feed_items; pages without tables emit zero rows."""
-    from .kernel import HTML_TABLES_SCHEMA, html_tables_kernel, salted_partition_key
-
-    sel = df.select("url", "html")
-    if num_partitions:
-        sel = sel.repartition(num_partitions, salted_partition_key(salt))
-    return sel.mapInPandas(html_tables_kernel, HTML_TABLES_SCHEMA)
+    return df.select("url", "html").mapInPandas(html_tables_kernel, HTML_TABLES_SCHEMA)
 
 
-def jsonld_blocks(
-    df: DataFrame,
-    salt: int = 42,
-    num_partitions: Optional[int] = None,
-) -> DataFrame:
+def jsonld_blocks(df: DataFrame) -> DataFrame:
     """Schema.org structured-data tier: (url, html) -> one row per
     JSON-LD script block (url, block_idx, json). Field extraction is
     deliberately NOT in the kernel — downstream code uses the built-in
@@ -701,12 +674,7 @@ def jsonld_blocks(
     Spark-first split: Python only where the DOM walk demands it).
     Same zero-shuffle scan -> mapInPandas shape as the other
     extraction tiers."""
-    from .kernel import JSONLD_BLOCKS_SCHEMA, jsonld_blocks_kernel, salted_partition_key
-
-    sel = df.select("url", "html")
-    if num_partitions:
-        sel = sel.repartition(num_partitions, salted_partition_key(salt))
-    return sel.mapInPandas(jsonld_blocks_kernel, JSONLD_BLOCKS_SCHEMA)
+    return df.select("url", "html").mapInPandas(jsonld_blocks_kernel, JSONLD_BLOCKS_SCHEMA)
 
 
 def extraction_report(out: DataFrame) -> DataFrame:

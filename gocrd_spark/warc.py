@@ -36,7 +36,7 @@ unchanged (pytest runs WARC -> pages -> kernel -> kant golden sha).
 from __future__ import annotations
 
 import zlib
-from typing import Iterator
+from datetime import datetime
 
 _CRLF = b"\r\n"
 _MAX_HEADER_BYTES = 64 * 1024  # a header block beyond this is hostile
@@ -207,6 +207,8 @@ def write_warc(records: list[dict], gzip_members: bool = False) -> bytes:
 
 PAGES_FROM_WARC_SCHEMA = "url string, warc_ts timestamp, html binary, error string"
 
+_EPOCH = datetime(1970, 1, 1)  # warc_ts of a shard-level error row
+
 
 def _warc_ts(s: str):
     """Parse a WARC-Date into a tz-naive UTC pandas Timestamp. Returns
@@ -240,49 +242,30 @@ def warc_to_pages(warcs):
     pages parsed before it plus ONE error row carrying the diagnostic —
     one bad record never discards a ~1 GB shard, and never fails the
     job."""
-    import pandas as pd
+    from .kernel import as_bytes, row_kernel
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for batch in batches:
-            rows = []
-            for _, r in batch.iterrows():
-                records, error = parse_warc_salvage(bytes(r["warc"]))
-                for rec in records:
-                    h = rec["headers"]
-                    if h.get("warc-type") != "response":
-                        continue
-                    truncated = h.get("warc-truncated")
-                    ts, date_err = _warc_ts(h.get("warc-date", ""))
-                    # both diagnostics survive a record that is truncated
-                    # AND carries a malformed date (ADVICE r04)
-                    trunc_flag = (
-                        f"truncated: {truncated or 'unspecified'}"
-                        if truncated is not None
-                        else None
-                    )
-                    flag = "; ".join(filter(None, [trunc_flag, date_err])) or None
-                    rows.append(
-                        {
-                            "url": h.get("warc-target-uri", ""),
-                            "warc_ts": ts,
-                            "html": http_body(rec["payload"]),
-                            "error": flag,
-                        }
-                    )
-                if error is not None:
-                    rows.append(
-                        {
-                            "url": f"warc:{r['warc_id']}",
-                            "warc_ts": pd.Timestamp("1970-01-01"),
-                            "html": None,
-                            "error": f"warc parse error: {error}",
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["url", "warc_ts", "html", "error"]
+    def page_rows(warc_id, warc):
+        records, error = parse_warc_salvage(as_bytes(warc))
+        rows = []
+        for rec in records:
+            h = rec["headers"]
+            if h.get("warc-type") != "response":
+                continue
+            truncated = h.get("warc-truncated")
+            ts, date_err = _warc_ts(h.get("warc-date", ""))
+            # both diagnostics survive a record that is truncated AND
+            # carries a malformed date (ADVICE r04)
+            trunc_flag = (
+                f"truncated: {truncated or 'unspecified'}" if truncated is not None else None
             )
+            flag = "; ".join(filter(None, [trunc_flag, date_err])) or None
+            rows.append((h.get("warc-target-uri", ""), ts, http_body(rec["payload"]), flag))
+        if error is not None:
+            rows.append((f"warc:{warc_id}", _EPOCH, None, f"warc parse error: {error}"))
+        return rows
 
-    return warcs.mapInPandas(gen, PAGES_FROM_WARC_SCHEMA)
+    kernel = row_kernel(page_rows, PAGES_FROM_WARC_SCHEMA, keys=(), args=("warc_id", "warc"))
+    return warcs.mapInPandas(kernel, PAGES_FROM_WARC_SCHEMA)
 
 
 REVISITS_SCHEMA = (
@@ -303,46 +286,24 @@ def warc_revisits(warcs):
     fetches WITHOUT hashing any payload bytes itself. Same salvage +
     error-row contract as warc_to_pages; same narrow Scan->MapInPandas
     plan shape."""
-    import pandas as pd
+    from .kernel import as_bytes, row_kernel
 
-    cols = [
-        "url", "warc_ts", "refers_to", "refers_to_uri", "profile",
-        "payload_digest", "error",
-    ]
+    def revisit_rows(warc_id, warc):
+        records, error = parse_warc_salvage(as_bytes(warc))
+        rows = []
+        for rec in records:
+            h = rec["headers"]
+            if h.get("warc-type") != "revisit":
+                continue
+            ts, date_err = _warc_ts(h.get("warc-date", ""))
+            rows.append((
+                h.get("warc-target-uri", ""), ts, h.get("warc-refers-to"),
+                h.get("warc-refers-to-target-uri"), h.get("warc-profile"),
+                h.get("warc-payload-digest"), date_err,
+            ))
+        if error is not None:
+            rows.append((f"warc:{warc_id}", _EPOCH) + (None,) * 4 + (f"warc parse error: {error}",))
+        return rows
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for batch in batches:
-            rows = []
-            for _, r in batch.iterrows():
-                records, error = parse_warc_salvage(bytes(r["warc"]))
-                for rec in records:
-                    h = rec["headers"]
-                    if h.get("warc-type") != "revisit":
-                        continue
-                    ts, date_err = _warc_ts(h.get("warc-date", ""))
-                    rows.append(
-                        {
-                            "url": h.get("warc-target-uri", ""),
-                            "warc_ts": ts,
-                            "refers_to": h.get("warc-refers-to"),
-                            "refers_to_uri": h.get("warc-refers-to-target-uri"),
-                            "profile": h.get("warc-profile"),
-                            "payload_digest": h.get("warc-payload-digest"),
-                            "error": date_err,
-                        }
-                    )
-                if error is not None:
-                    rows.append(
-                        {
-                            "url": f"warc:{r['warc_id']}",
-                            "warc_ts": pd.Timestamp("1970-01-01"),
-                            "refers_to": None,
-                            "refers_to_uri": None,
-                            "profile": None,
-                            "payload_digest": None,
-                            "error": f"warc parse error: {error}",
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return warcs.mapInPandas(gen, REVISITS_SCHEMA)
+    kernel = row_kernel(revisit_rows, REVISITS_SCHEMA, keys=(), args=("warc_id", "warc"))
+    return warcs.mapInPandas(kernel, REVISITS_SCHEMA)
