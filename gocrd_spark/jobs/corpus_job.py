@@ -63,6 +63,7 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    from gocrd_spark import pins
     from gocrd_spark.operators.compose import training_corpus
     from gocrd_spark.session import get_spark
 
@@ -71,52 +72,51 @@ def main(argv: list[str] | None = None) -> int:
     # session, which must survive the call
     owns_session = SparkSession.getActiveSession() is None
     spark = get_spark(master=args.master, app_name="gocrd-corpus")
-    out = None
     try:
-        docs = spark.read.parquet(args.input)
-        out = training_corpus(
-            docs,
-            jaccard_threshold=args.jaccard_threshold,
-            chunk_words=args.chunk_words,
-            rates=dict(args.rate),
-            default_rate=args.default_rate,
-            seed=args.seed,
-            budget_tokens=args.budget_tokens,
-            min_quality=args.min_quality,
-            star_bucket=args.star_bucket,
-        ).persist()  # one chain execution feeds both the write and the stats
-        writer = out.write.mode(
-            "overwrite" if args.overwrite else "errorifexists"
-        ).partitionBy("shard_id")
-        if args.out_format == "jsonl":
-            writer.option("compression", "gzip").json(args.output)
-        else:
-            writer.parquet(args.output)
-        # stats from the (deterministic, now-cached) chain itself, not a
-        # read-back: an all-filtered run writes only _SUCCESS and an
-        # empty partitioned dir cannot infer a schema on read. The
-        # input_docs count remains a zero-column parquet scan of the
-        # input — cheap next to the chain, which now runs ONCE.
-        stats = out.agg(
-            F.count(F.lit(1)).alias("docs"),
-            F.sum("n_tokens").alias("tokens"),
-            F.countDistinct("shard_id").alias("shards"),
-        ).collect()[0]
-        print(
-            json.dumps(
-                {
-                    "input_docs": docs.count(),
-                    "kept_docs": stats["docs"],
-                    "total_tokens": int(stats["tokens"] or 0),
-                    "shards": stats["shards"],
-                    "output": args.output,
-                }
+        with pins.scope(spark):
+            docs = spark.read.parquet(args.input)
+            # kept: one chain execution feeds both the write and the stats
+            out = pins.keep(training_corpus(
+                docs,
+                jaccard_threshold=args.jaccard_threshold,
+                chunk_words=args.chunk_words,
+                rates=dict(args.rate),
+                default_rate=args.default_rate,
+                seed=args.seed,
+                budget_tokens=args.budget_tokens,
+                min_quality=args.min_quality,
+                star_bucket=args.star_bucket,
+            ))
+            writer = out.write.mode(
+                "overwrite" if args.overwrite else "errorifexists"
+            ).partitionBy("shard_id")
+            if args.out_format == "jsonl":
+                writer.option("compression", "gzip").json(args.output)
+            else:
+                writer.parquet(args.output)
+            # stats from the (deterministic, now-cached) chain itself, not
+            # a read-back: an all-filtered run writes only _SUCCESS and an
+            # empty partitioned dir cannot infer a schema on read. The
+            # input_docs count remains a zero-column parquet scan of the
+            # input — cheap next to the chain, which now runs ONCE.
+            stats = out.agg(
+                F.count(F.lit(1)).alias("docs"),
+                F.sum("n_tokens").alias("tokens"),
+                F.countDistinct("shard_id").alias("shards"),
+            ).collect()[0]
+            print(
+                json.dumps(
+                    {
+                        "input_docs": docs.count(),
+                        "kept_docs": stats["docs"],
+                        "total_tokens": int(stats["tokens"] or 0),
+                        "shards": stats["shards"],
+                        "output": args.output,
+                    }
+                )
             )
-        )
         return 0
     finally:
-        if out is not None:
-            out.unpersist(blocking=False)
         if owns_session:
             spark.stop()
 

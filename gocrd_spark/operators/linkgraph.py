@@ -39,6 +39,8 @@ from pyspark.sql import functions as F
 from ..kernel import row_kernel
 
 PAGERANK_SCALE = 10**12
+# the rank loops localCheckpoint every this many rounds (plan-depth control)
+_CHECKPOINT_EVERY = 4
 
 OUTLINKS_SCHEMA = "src_url string, dst_url string, href string, anchor string"
 
@@ -152,9 +154,7 @@ def host_edges(outlinks: DataFrame) -> DataFrame:
     )
 
 
-def host_pagerank(
-    edges: DataFrame, n_iters: int = 5, checkpoint_every: int = 4
-) -> DataFrame:
+def host_pagerank(edges: DataFrame, n_iters: int = 5) -> DataFrame:
     """Fixed-iteration PageRank over a weighted host graph in exact
     BIGINT arithmetic (damping 0.85 as integer ops on rank*1e12):
 
@@ -222,7 +222,7 @@ def host_pagerank(
                 ),
             )
         )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < n_iters:
+        if (i + 1) % _CHECKPOINT_EVERY == 0 and i + 1 < n_iters:
             # same plan-depth control as connected_components: truncate
             # lineage so the iteration count never blows up the planner
             ranks = ranks.localCheckpoint(eager=True)
@@ -233,7 +233,6 @@ def host_trustrank(
     edges: DataFrame,
     seeds: DataFrame,
     n_iters: int = 5,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """TrustRank (Gyongyi et al. 2004) over the weighted host graph —
     PageRank personalized to a TRUSTED SEED set, in the same exact
@@ -317,7 +316,7 @@ def host_trustrank(
                 .alias("trust_e12"),
             )
         )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < n_iters:
+        if (i + 1) % _CHECKPOINT_EVERY == 0 and i + 1 < n_iters:
             ranks = ranks.localCheckpoint(eager=True)
     return ranks.select("host", "trust_e12")
 

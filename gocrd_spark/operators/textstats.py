@@ -1137,12 +1137,12 @@ def unigram_logprob(docs: DataFrame) -> DataFrame:
     Returns (doc_id, n_tokens, sum_logprob_e6) for every document with
     at least one token.
     """
-    # toks feeds the corpus LM (tf) AND the per-doc counts (dc); tf
-    # feeds the total AND the LM — pinned so tokenize runs once (the
-    # multiply-consumed-intermediate rule)
+    # tf feeds the total AND the LM — pinned (vocabulary-sized). toks
+    # feeds tf AND the per-doc counts (dc) but is NOT pinned: the pin
+    # would store every corpus token to save one tokenize pass
     toks = docs.select(
         "doc_id", F.explode(_tokens(F.lower(F.col("text")))).alias("term")
-    ).localCheckpoint(eager=False)
+    )
     tf = toks.groupBy("term").agg(F.count(F.lit(1)).alias("tf")).localCheckpoint(
         eager=False
     )

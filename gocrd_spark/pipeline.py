@@ -562,8 +562,11 @@ def bloom_filter_unprocessed(
     ``extracted`` (same contract as filter_unprocessed).
     """
     # two consumers (bitmap build + the maybe semi-join backstop) —
-    # pinned so the done-set scan + distinct runs once (keys only, no
-    # payload; the multiply-consumed-intermediate rule)
+    # pinned so the done-set scan + distinct runs once (the multiply-
+    # consumed-intermediate rule). Footprint: one row per distinct done
+    # key, keys only (no payload), held MEMORY_AND_DISK so it spills
+    # rather than fails; lineage is cut, so losing an executor loses
+    # its blocks and fails the query instead of recomputing them.
     done = (
         extracted.select(F.col(key).alias("_k"))
         .filter(F.col("_k").isNotNull())

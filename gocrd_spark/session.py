@@ -12,18 +12,16 @@ from typing import Optional
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
-DEFAULT_ARROW_ROWS = int(os.environ.get("SPARK_GRAFT_ARROW_ROWS", "128"))
+DEFAULT_ARROW_ROWS = 128
 # Spark 4's direct bound on Arrow batch PAYLOAD: with the row cap alone,
 # 128 megabyte-scale crawl rows could hold ~hundreds of MB per batch;
 # the byte cap splits fat batches regardless of row count, so the row
 # cap can sit where SMALL rows are efficient. 64 MiB keeps worst-case
 # per-worker batch memory bounded; inert for KB-scale rows.
-DEFAULT_ARROW_BYTES = int(
-    os.environ.get("SPARK_GRAFT_ARROW_BYTES", str(64 * 1024 * 1024))
-)
+DEFAULT_ARROW_BYTES = 64 * 1024 * 1024
 
 
 def get_spark(
@@ -42,8 +40,7 @@ def get_spark(
       +26% extraction throughput at local[32] on the bench corpus
       (16.7k -> 21.1k docs/s salted plan; 2->8 scaling pair holds >=
       0.83), because KB-scale rows were paying per-batch Python
-      round-trip overhead at 64. Both env-tunable
-      (SPARK_GRAFT_ARROW_ROWS / SPARK_GRAFT_ARROW_BYTES).
+      round-trip overhead at 64.
     - AQE on: coalesces small post-shuffle partitions and splits skewed
       ones at runtime — the salted url-hash shuffle benefits directly.
     """
@@ -70,14 +67,10 @@ def get_spark(
         # measured 12x on contamination_flags, 5.5s -> 0.5s). The rows
         # it would prune (documents whose shingle array is empty) are
         # ~zero in any real corpus, at every scale, so the rule is pure
-        # cost here. Env-tunable for workloads with sparse generators.
+        # cost here.
         .config(
             "spark.sql.optimizer.excludedRules",
-            os.environ.get(
-                "SPARK_GRAFT_EXCLUDED_RULES",
-                "org.apache.spark.sql.catalyst.optimizer."
-                "InferFiltersFromGenerate",
-            ),
+            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows))

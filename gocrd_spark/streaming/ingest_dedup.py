@@ -52,11 +52,12 @@ def ingest_dedup_batch(
     """Process ONE micro-batch (callable directly for tests / backfill):
     near-dup pairs vs (durable table + this batch), then fold the batch
     into table + docs store. Idempotent per batch_id."""
+    from gocrd_spark import pins
     from gocrd_spark.operators.dedup import minhash_append, minhash_incremental
 
     spark = batch.sparkSession
-    docs = batch.select("doc_id", "text").persist()
-    try:
+    with pins.scope(spark):  # releases this micro-batch's pins
+        docs = pins.keep(batch.select("doc_id", "text"))
         if docs.isEmpty():
             return
         # corpus text for verification = previously ingested + this
@@ -81,8 +82,6 @@ def ingest_dedup_batch(
         pairs.write.mode("overwrite").parquet(_batch_dir(pairs_dir, batch_id))
         docs.write.mode("overwrite").parquet(_batch_dir(store_dir, batch_id))
         minhash_append(docs, table_path, batch_id=f"stream-{batch_id}")
-    finally:
-        docs.unpersist()
 
 
 def run_ingest_dedup(

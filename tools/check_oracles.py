@@ -2,6 +2,8 @@
 ``queries()`` entry at sf0.01 and compare against its ``oracle_sql()``
 DuckDB twin — row count, sorted column names, and an order-insensitive
 value hash. Rows-only queries just check they run and report counts.
+Each query runs in its own ``pins.scope``, so its pins are released
+before the next one starts.
 
 Usage: python tools/check_oracles.py [--json OUT.json] [sf_dir] [name ...]
 
@@ -70,6 +72,7 @@ def main() -> int:
 
     sys.path.insert(0, ".")
     import __spark_entry__ as entry
+    from gocrd_spark import pins
     from gocrd_spark.session import get_spark
 
     spark = get_spark(master="local[8]", app_name="oracle-check")
@@ -98,7 +101,8 @@ def main() -> int:
         records[name] = rec
         t0 = time.time()
         try:
-            sdf = normalize(fn(spark, sf_dir).toPandas())
+            with pins.scope(spark):
+                sdf = normalize(fn(spark, sf_dir).toPandas())
         except Exception as exc:
             print(f"FAIL  {name}: spark error: {exc}")
             rec["err"] = f"spark error: {exc}"
