@@ -9,8 +9,9 @@ Usage (sandbox):
     python -m gocrd_spark.jobs.extract_job --input /tmp/pages --output /tmp/out
 
 Resumable: rerunning with the same output dir skips committed groups
-(SURVEY.md §4.4). Exit code 0 even when individual documents fail —
-they become error rows; the summary JSON on stdout carries counters.
+(SURVEY.md §4.4), and runs no Spark job once every group is committed.
+Exit code 0 even when individual documents fail — they become error
+rows; the summary JSON on stdout carries counters.
 """
 
 from __future__ import annotations
@@ -26,7 +27,9 @@ def main(argv: list[str] | None = None) -> int:
     parser.add_argument("--input-format", default="parquet", choices=["parquet", "warc"],
                         help="read parquet/Iceberg pages (default) or raw *.warc/*.warc.gz shards")
     parser.add_argument("--output", required=True, help="output dir (data/ + _commits/)")
-    parser.add_argument("--n-groups", type=int, default=64, help="commit groups (O(100k) at crawl scale)")
+    parser.add_argument("--n-groups", type=int, default=64,
+                        help="commit groups (O(100k) at crawl scale); the writer "
+                             "runs min(pending groups, scan partitions) tasks")
     parser.add_argument("--salt", type=int, default=42, help="url-hash salt")
     parser.add_argument("--ts-start", default=None, help="warc_ts lower bound (inclusive)")
     parser.add_argument("--ts-end", default=None, help="warc_ts upper bound (exclusive)")

@@ -32,6 +32,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import fsio
 from .kernel import (
     EXTRACTED_SCHEMA,
     FEED_ITEMS_SCHEMA,
@@ -286,19 +287,30 @@ def run_extract_job(
     both files publish, so resume can never see a half-written group).
 
     Each commit group ``g`` (deterministic function of url+salt+n_groups)
-    is written by exactly one task — ``repartition(n_groups, g)``
-    co-locates all of a group's rows — as ``data/g=<g>/part-<uuid>.parquet``
-    via tmp+rename, then marked done in the commit log. A rerun skips
-    committed groups entirely (anti-filter on a column predicate, so
-    Catalyst can prune before the shuffle).
+    is written by exactly one task as ``data/g=<g>/part-<g>.parquet``
+    via tmp+rename, then marked done in the commit log. The writer stage
+    runs ``k = min(pending groups, scan partitions)`` tasks via
+    ``repartition(k, g)``: hash-partitioning on ``g`` still puts all of
+    a group's rows in one task, and a task writes every group it holds.
+    Every Python task pays a fixed start-up cost, so ``k`` follows the
+    input's own split count (sized by Spark from ``maxPartitionBytes``
+    and the cores), not the logical group count. A rerun skips committed
+    groups entirely (anti-filter on a column predicate, so Catalyst can
+    prune before the shuffle); when no group is pending it returns the
+    zero summary without running a Spark job. A group that the input
+    leaves empty never gets a marker, so such an output stays pending
+    and its rerun runs one job over zero rows.
 
     ``fail_group`` injects a mid-job failure for the kill/resume test.
 
-    At 10^12-document scale: n_groups scales to O(100k); the commit dir
-    maps to an object-store prefix; listing is one LIST call; group size
-    = input/n_groups stays within executor memory because the kernel
-    streams Arrow batches straight into an open ParquetWriter (no
-    per-group buffering).
+    At 10^12-document scale: n_groups scales to O(100k) and the scan
+    has far more partitions than that, so ``k == n_groups`` and each task
+    writes one group; the commit dir maps to an object-store prefix;
+    listing is one LIST call; group size = input/n_groups stays within
+    executor memory because the kernel streams Arrow batches into an
+    open ParquetWriter, holding back less than one batch of rows per
+    group. A task holds one open writer (two with metadata) per
+    non-empty group it owns.
     """
     os.makedirs(os.path.join(output_dir, "data"), exist_ok=True)
     if with_metadata:
@@ -327,13 +339,24 @@ def run_extract_job(
         os.replace(tmp, manifest_path)
 
     done = committed_groups(output_dir)
+    pending = set(range(n_groups)) - done
+    if not pending:
+        # nothing to write. An existing input path resolves without the
+        # parquet schema-inference job; any other input goes through
+        # load_pages, which raises for a missing one as a fresh run would
+        if not fsio.exists(spark, input_path):
+            load_pages(spark, input_path, input_format)
+        return _job_summary([], done)
     pages = prune_warc_ts(
         load_pages(spark, input_path, input_format), ts_start, ts_end
     )
     df = pages.select("url", "html").withColumn("g", group_id(n_groups, salt))
     if done:
         df = df.filter(~F.col("g").isin(*[int(g) for g in done]))
-    df = df.repartition(n_groups, F.col("g"))
+    # the scan's split count is known without a job (no shuffle below
+    # it); an empty WARC shard dir scans as 0 partitions
+    k = max(1, min(len(pending), pages.rdd.getNumPartitions()))
+    df = df.repartition(k, F.col("g"))
 
     data_dir = os.path.join(output_dir, "data")
     meta_dir = os.path.join(output_dir, "meta")
@@ -343,6 +366,7 @@ def run_extract_job(
 
     def writer_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import pyarrow as pa
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         arrow_schema = pa.schema(
@@ -421,35 +445,57 @@ def run_extract_job(
                     )
             return writers[g]
 
-        for pdf in batches:
-            for g_value, grp in pdf.groupby("g", sort=False):
-                g = int(g_value)
-                if inject_fail is not None and g == inject_fail:
-                    raise RuntimeError(f"injected failure for group {g}")
-                result = extract_batch(grp)
-                writer, _, _, stats = get_writer(g)
-                stats["input_rows"] += len(grp)
-                n_err = int(result["error"].notna().sum())
-                stats["err_rows"] += n_err
-                stats["ok_rows"] += len(result) - n_err
-                stats["bytes_in"] += int(grp["html"].map(
-                    lambda b: len(b) if b is not None else 0).sum())
-                stats["bytes_out"] += int(result["text"].map(
-                    lambda t: len(t.encode("utf-8")) if t is not None else 0).sum())
-                writer.write_table(pa.Table.from_pandas(result, schema=arrow_schema,
-                                                        preserve_index=False))
+        # rows a group holds but has not written yet: a task's batch is
+        # spread over its groups, and a parquet row group per slice of a
+        # batch bloats the files, so a group writes once it holds one
+        # batch of rows (at once when a task holds one group) or at close
+        unwritten: dict[int, list] = {}  # g -> [(rows, meta rows)]
+
+        def flush(g: int) -> None:
+            parts = unwritten.pop(g, [])
+            if parts:
+                writers[g][0].write_table(pa.concat_tables([d for d, _ in parts]))
                 if emit_meta:
-                    meta_writers[g][0].write_table(
-                        pa.Table.from_pandas(
-                            page_meta_batch(grp), schema=meta_schema,
-                            preserve_index=False,
-                        )
-                    )
+                    meta_writers[g][0].write_table(pa.concat_tables([m for _, m in parts]))
+
+        def n_bytes(col) -> int:  # byte length; a null counts 0
+            return pc.sum(pc.binary_length(col)).as_py() or 0
+
+        for pdf in batches:
+            # a task holds several groups: run each kernel once per
+            # batch, then hand every group its rows (positions in pdf,
+            # which the 1:1 kernels keep)
+            groups = pdf.groupby("g", sort=False).indices
+            if inject_fail in groups:
+                raise RuntimeError(f"injected failure for group {inject_fail}")
+            if not groups:
+                continue
+            result = pa.Table.from_pandas(extract_batch(pdf), schema=arrow_schema,
+                                          preserve_index=False)
+            meta = pa.Table.from_pandas(
+                page_meta_batch(pdf), schema=meta_schema, preserve_index=False
+            ) if emit_meta else None
+            html = pa.array(pdf["html"], pa.binary())
+            for g_value, rows in groups.items():
+                g = int(g_value)
+                stats = get_writer(g)[3]
+                part = result.take(rows)
+                n_err = len(rows) - part["error"].null_count
+                stats["input_rows"] += len(rows)
+                stats["err_rows"] += n_err
+                stats["ok_rows"] += len(rows) - n_err
+                stats["bytes_in"] += n_bytes(html.take(rows))
+                stats["bytes_out"] += n_bytes(part["text"])
+                held = unwritten.setdefault(g, [])
+                held.append((part, meta.take(rows) if emit_meta else None))
+                if sum(d.num_rows for d, _ in held) >= len(pdf):
+                    flush(g)
         # close + atomic publish + commit markers (meta publishes BEFORE
         # the marker: a group is either fully present in both tables or
         # uncommitted — never half)
         summaries = []
         for g, (writer, tmp, final, stats) in writers.items():
+            flush(g)
             writer.close()
             os.replace(tmp, final)  # atomic on one filesystem
             if emit_meta:
@@ -474,16 +520,18 @@ def run_extract_job(
         "bytes_in long, bytes_out long, wall_ms long"
     )
     stats_rows = df.mapInPandas(writer_kernel, summary_schema).collect()
-    agg = {
+    return _job_summary(stats_rows, done)
+
+
+def _job_summary(stats_rows: list, done: set[int]) -> dict:
+    """The job's counters: the groups this run committed (one stats row
+    each) and the groups it found committed."""
+    return {
         "groups_committed_this_run": len(stats_rows),
         "groups_previously_done": len(done),
-        "input_rows": sum(r.input_rows for r in stats_rows),
-        "ok_rows": sum(r.ok_rows for r in stats_rows),
-        "err_rows": sum(r.err_rows for r in stats_rows),
-        "bytes_in": sum(r.bytes_in for r in stats_rows),
-        "bytes_out": sum(r.bytes_out for r in stats_rows),
+        **{k: sum(r[k] for r in stats_rows)
+           for k in ("input_rows", "ok_rows", "err_rows", "bytes_in", "bytes_out")},
     }
-    return agg
 
 
 def read_extracted(spark: SparkSession, output_dir: str) -> DataFrame:

@@ -4,11 +4,15 @@ surface, and commit-log resume (SURVEY.md §5.2 items 2-3)."""
 
 import hashlib
 import os
+import uuid
+from contextlib import contextmanager
 
+import pyarrow.parquet as pq
 import pytest
 
 from gocrd_spark import datagen
 from gocrd_spark.extract import extract_any_document, mets_records
+from gocrd_spark.kernel import group_id
 from gocrd_spark.pipeline import (
     committed_groups,
     extract_pages,
@@ -215,11 +219,38 @@ class TestBloomFilterUnprocessed:
         assert "BroadcastHashJoin" in plan
 
 
+def _rows(spark, output_dir: str) -> dict:
+    return {
+        r.url: (r.text, r.spans, r.error)
+        for r in read_extracted(spark, output_dir).collect()
+    }
+
+
+@contextmanager
+def _jobs(spark):
+    """Collects the ids of the Spark jobs submitted inside the block."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    ids: list[int] = []
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
 class TestResume:
     def _write_input(self, spark, pages, tmp_path) -> str:
         path = str(tmp_path / "pages_in")
         pages.write.parquet(path)
         return path
+
+    def _nonempty_groups(self, spark, inp, n_groups) -> set[int]:
+        return {
+            r.g for r in spark.read.parquet(inp)
+            .select(group_id(n_groups, 42).alias("g")).distinct().collect()
+        }
 
     def test_kill_and_resume(self, spark, pages, tmp_path):
         inp = self._write_input(spark, pages, tmp_path)
@@ -235,29 +266,34 @@ class TestResume:
         # run 2: resume completes the remaining groups only
         summary = run_extract_job(spark, inp, out, n_groups=n_groups)
         assert summary["groups_previously_done"] == len(done_after_crash)
-        assert committed_groups(out) == set(range(n_groups)) & committed_groups(out)
+        assert summary["groups_committed_this_run"] == n_groups - len(done_after_crash)
+        assert committed_groups(out) == set(range(n_groups))
 
         # output identical to a clean one-shot run
         clean = str(tmp_path / "clean")
         run_extract_job(spark, inp, clean, n_groups=n_groups)
-        resumed_rows = {
-            r.url: (r.text, r.error) for r in read_extracted(spark, out).collect()
-        }
-        clean_rows = {
-            r.url: (r.text, r.error) for r in read_extracted(spark, clean).collect()
-        }
-        assert resumed_rows == clean_rows
-        assert len(resumed_rows) == N_DOCS
+        resumed = _rows(spark, out)
+        assert resumed == _rows(spark, clean)
+        assert len(resumed) == N_DOCS
 
     def test_no_recompute_of_committed_groups(self, spark, pages, tmp_path):
+        """A rerun over a fully committed output submits no Spark job
+        and returns the zero summary; a missing input still raises."""
         inp = self._write_input(spark, pages, tmp_path)
         out = str(tmp_path / "out2")
         first = run_extract_job(spark, inp, out, n_groups=4)
         assert first["input_rows"] == N_DOCS
-        second = run_extract_job(spark, inp, out, n_groups=4)
-        assert second["groups_committed_this_run"] == 0
-        assert second["input_rows"] == 0  # anti-filter pruned everything
+        assert committed_groups(out) == set(range(4))
+        with _jobs(spark) as job_ids:
+            second = run_extract_job(spark, inp, out, n_groups=4)
+        assert job_ids == []
+        assert second == {
+            "groups_committed_this_run": 0, "groups_previously_done": 4,
+            "input_rows": 0, "ok_rows": 0, "err_rows": 0, "bytes_in": 0, "bytes_out": 0,
+        }
         assert len(read_extracted(spark, out).collect()) == N_DOCS
+        with pytest.raises(Exception, match="PATH_NOT_FOUND"):
+            run_extract_job(spark, str(tmp_path / "missing"), out, n_groups=4)
 
     def test_resume_rejects_different_layout(self, spark, pages, tmp_path):
         """Committed group ids are meaningless under another
@@ -278,6 +314,83 @@ class TestResume:
         assert summary["ok_rows"] + summary["err_rows"] == N_DOCS
         assert summary["err_rows"] >= 1
         assert summary["bytes_in"] > summary["bytes_out"] > 0
+        # the byte counters equal the per-row Python reference
+        htmls = [datagen.make_row(i)["html"] for i in range(N_DOCS)]
+        results = [extract_any_document(h) for h in htmls]
+        assert summary["bytes_in"] == sum(len(h) for h in htmls)
+        assert summary["bytes_out"] == sum(
+            len(r["text"].encode("utf-8")) for r in results if r["text"] is not None
+        )
+        assert summary["err_rows"] == sum(r["error"] is not None for r in results)
+
+    def test_writer_tasks_follow_scan_partitions(self, spark, pages, tmp_path):
+        """64 commit groups over a scan of a few partitions: the writer
+        stage runs no more tasks than the scan, each task writing many
+        groups, and every non-empty group still lands in exactly one
+        data file and one meta file under its own marker. With 16-row
+        Arrow batches a task's rows arrive in several batches, and a
+        group smaller than a batch still writes a single row group."""
+        inp = self._write_input(spark, pages, tmp_path)
+        n_scan = spark.read.parquet(inp).rdd.getNumPartitions()
+        nonempty = self._nonempty_groups(spark, inp, 64)
+        assert n_scan < len(nonempty) < 64  # several groups per task; some empty
+
+        out = str(tmp_path / "out64")
+        batch_rows = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        saved = spark.conf.get(batch_rows)
+        spark.conf.set(batch_rows, "16")
+        try:
+            with _jobs(spark) as job_ids:
+                summary = run_extract_job(spark, inp, out, n_groups=64, with_metadata=True)
+        finally:
+            spark.conf.set(batch_rows, saved)
+        st = spark.sparkContext.statusTracker()
+        stage_tasks = [
+            st.getStageInfo(sid).numTasks
+            for jid in job_ids
+            for sid in st.getJobInfo(jid).stageIds
+            if st.getStageInfo(sid) is not None
+        ]
+        assert stage_tasks and max(stage_tasks) <= n_scan
+
+        assert summary["groups_committed_this_run"] == len(nonempty)
+        assert summary["input_rows"] == N_DOCS
+        assert committed_groups(out) == nonempty
+        for sub in ("data", "meta"):
+            gdirs = {d for d in os.listdir(os.path.join(out, sub)) if d.startswith("g=")}
+            assert gdirs == {f"g={g}" for g in nonempty}
+            for d in gdirs:
+                name = f"part-{int(d[2:]):05d}.parquet"
+                assert os.listdir(os.path.join(out, sub, d)) == [name]
+                assert pq.ParquetFile(os.path.join(out, sub, d, name)).num_row_groups == 1
+
+        # the empty groups stay pending: the rerun writes nothing
+        again = run_extract_job(spark, inp, out, n_groups=64, with_metadata=True)
+        assert again["groups_committed_this_run"] == again["input_rows"] == 0
+        assert again["groups_previously_done"] == len(nonempty)
+
+    def test_failed_task_holding_several_groups(self, spark, pages, tmp_path):
+        """The failing task also held other groups: none of them commit,
+        and the resume completes them to a clean run's output."""
+        inp = self._write_input(spark, pages, tmp_path)
+        nonempty = self._nonempty_groups(spark, inp, 64)
+        failing = min(nonempty)
+        out = str(tmp_path / "out_fail")
+        with pytest.raises(Exception):
+            run_extract_job(spark, inp, out, n_groups=64, fail_group=failing)
+        done_after_crash = committed_groups(out)
+        assert failing not in done_after_crash
+        # more than the failing group is uncommitted: its task held others
+        assert len(nonempty - done_after_crash) > 1
+
+        summary = run_extract_job(spark, inp, out, n_groups=64)
+        assert summary["groups_committed_this_run"] == len(nonempty - done_after_crash)
+        assert committed_groups(out) == nonempty
+        clean = str(tmp_path / "clean64")
+        run_extract_job(spark, inp, clean, n_groups=64)
+        resumed = _rows(spark, out)
+        assert resumed == _rows(spark, clean)
+        assert len(resumed) == N_DOCS
 
 
 class TestJobMetadataSideTable:
